@@ -60,7 +60,13 @@ def run_ram_pipeline(
     max_speed_kmh: float = MAX_SPEED_KMH,
 ) -> dict[str, DataFrame]:
     """Run the full analysis job; write all four sinks under ``out_dir``;
-    return the intermediate DataFrames for inspection.
+    return the intermediate DataFrames for inspection (``flat`` is the
+    results table with its poi map flattened to ``eta_<type>`` columns,
+    the CSV/GeoJSON sinks' input).
+
+    The run is recorded in the operation log under ``out_dir/oplog``: a
+    failure anywhere after ``start`` logs an ``error`` event and leaves
+    the op ``failed`` (not stuck ``running``) before re-raising.
 
     ``selected_aa_ids`` mirrors the scenario-settings admin-area selection
     (S3/S4, index.js:308-320); None = all areas.
@@ -68,7 +74,32 @@ def run_ram_pipeline(
     ol = OperationLog(spark, os.path.join(out_dir, "oplog"))
     op = ol.start("generate-analysis", project_id=1, scenario_id=1)
     ol.log(op, "start", {"message": "Analysis started"})
+    try:
+        dfs = _analyse_and_write(
+            spark, sf_dir, out_dir, selected_aa_ids, max_time_s,
+            max_speed_kmh, ol, op,
+        )
+    except Exception as err:
+        # a failed run must not leave a stuck `running` op: record the
+        # error and a terminal `failed` status, then re-raise
+        ol.fail(op, err)
+        raise
+    ol.finish(op)
+    return dfs
 
+
+def _analyse_and_write(
+    spark: SparkSession,
+    sf_dir: str,
+    out_dir: str,
+    selected_aa_ids: list[int] | None,
+    max_time_s: float,
+    max_speed_kmh: float,
+    ol: OperationLog,
+    op: int,
+) -> dict[str, DataFrame]:
+    """The analysis DAG and its five sinks, logging progress to op
+    ``op`` of ``ol``."""
     # -- input acquisition (S1-S5) + indicator pivot (A2) ------------------
     t = load_tables(spark, sf_dir)
     origins = ram_domain.origins(t["customer"])
@@ -153,7 +184,6 @@ def run_ram_pipeline(
         for done in [pool.submit(j) for j in sink_jobs]:
             done.result()  # propagate the first failure, if any
 
-    ol.finish(op)
     return {
         "origins": origins,
         "pois": pois,
@@ -161,4 +191,5 @@ def run_ram_pipeline(
         "in_area": in_area,
         "eta": eta,
         "results": results,
+        "flat": flat,
     }

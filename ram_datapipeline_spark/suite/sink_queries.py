@@ -303,9 +303,8 @@ def q_ram_full_job(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = _rt_path("ramjob", sf_dir)
     shutil.rmtree(out, ignore_errors=True)
     dfs = run_ram_pipeline(spark, sf_dir, out, selected_aa_ids=None)
-    flat_schema = sinks.flatten_poi_map(dfs["results"]).schema
     return (
-        spark.read.schema(flat_schema)
+        spark.read.schema(dfs["flat"].schema)
         .option("header", "true")
         .csv(os.path.join(out, "csv"))
     )

@@ -965,3 +965,18 @@ def test_anova_single_group_aggregate(spark):
     p = plan_text(spark, "agg_anova_f")
     assert n_ops(p, "Scan parquet") == 1
     assert n_data_shuffles(p) <= 2  # group agg + 1-row final fold
+
+
+@pytest.mark.parametrize("rows", [[], [(1, "a")]])
+def test_local_rows_df_plans_local_table_scan(spark, rows):
+    """Driver-local rows — zero of them included — must plan as a
+    LocalTableScan, never as `Scan ExistingRDD` (a Python-worker relation
+    that costs a worker round trip on every action)."""
+    from ram_datapipeline_spark.session import local_rows_df
+
+    df = local_rows_df(spark, rows, "k long, v string")
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan, plan
+    assert "LocalTableScan" in plan, plan
+    assert [tuple(r) for r in df.collect()] == rows
+    assert df.schema.simpleString() == "struct<k:bigint,v:string>"

@@ -5,8 +5,10 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
+from ram_datapipeline_spark import sinks
 from ram_datapipeline_spark.plans import run_ram_pipeline
 from ram_datapipeline_spark.streaming import OperationLog
 from tests.conftest import SF_DIR
@@ -68,3 +70,23 @@ def test_pipeline_eta_semantics(spark, tmp_path):
     etas = [r["eta"] for r in vals]
     # every non-null eta respects the maxTime cutoff
     assert all(e <= 1800.0 for e in etas if e is not None)
+
+
+def test_pipeline_failure_marks_op_failed(spark, tmp_path, monkeypatch):
+    """A sink that raises leaves the op `failed` with an `error` log
+    event — not stuck `running` — and re-raises; a rerun of the same
+    (name, project, scenario) then starts."""
+    def broken_sink(*args, **kwargs):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(sinks, "write_csv", broken_sink)
+    out = str(tmp_path / "out_fail")
+    with pytest.raises(OSError, match="disk full"):
+        run_ram_pipeline(spark, SF_DIR, out, selected_aa_ids=[1])
+    ol = OperationLog(spark, f"{out}/oplog")
+    status = ol.current_status().collect()
+    assert len(status) == 1 and status[0]["status"] == "failed"
+    last = ol.last_log(status[0]["op_id"])
+    assert last["code"] == "error"
+    assert json.loads(last["data"]) == {"message": "disk full", "error": "OSError"}
+    assert ol.start("generate-analysis", 1, 1) == status[0]["op_id"] + 1

@@ -4,6 +4,8 @@ operation-log semantics."""
 
 from __future__ import annotations
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -193,6 +195,74 @@ def test_operation_log_batches_appends(spark, tmp_path):
     assert [r["log_id"] for r in rows] == list(range(41))
     assert [r["code"] for r in rows[:3]] == ["step:0", "step:1", "step:2"]
     assert rows[-1]["code"] == "success"
+
+
+def _jobs_in_group(spark, group: str, fn) -> int:
+    """Spark jobs ``fn()`` launches, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "oplog job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_operation_log_fresh_lifecycle_runs_three_jobs(spark, tmp_path):
+    """On a fresh root the whole lifecycle is its three appends — the
+    running status, one log flush, the complete status — and no read
+    jobs (no guard count, no max(op_id), no status re-read)."""
+    ol = OperationLog(spark, str(tmp_path))
+
+    def lifecycle():
+        op = ol.start("fresh", project_id=1, scenario_id=1)
+        ol.log(op, "start", {"message": "Analysis started"})
+        ol.log(op, "process:areas", {"message": "routing complete"})
+        ol.finish(op)
+
+    assert _jobs_in_group(spark, f"oplog-fresh-{tmp_path.name}", lifecycle) == 3
+    status = ol.current_status().collect()
+    assert [(r["op_id"], r["status"]) for r in status] == [(0, "complete")]
+
+
+def test_operation_log_second_instance(spark, tmp_path):
+    """A second instance on the same root sees the first one's running
+    op through the table: its start is refused, and its finish of an op
+    it did not start takes the read path and succeeds."""
+    first = OperationLog(spark, str(tmp_path))
+    op = first.start("shared", project_id=1, scenario_id=1)
+    first.log(op, "start", {"message": "Analysis started"})
+    first.flush()
+
+    second = OperationLog(spark, str(tmp_path))
+    with pytest.raises(RuntimeError, match="already running"):
+        second.start("shared", 1, 1)
+    second.finish(op)
+    status = {r["op_id"]: r["status"] for r in second.current_status().collect()}
+    assert status == {op: "complete"}
+    codes = [r["code"] for r in second.logs(op).collect()]
+    assert codes == ["success", "start"]  # log_ids continue the table's
+    with pytest.raises(RuntimeError, match="already complete"):
+        second.finish(op)
+    assert second.start("shared", 1, 1) == op + 1
+
+
+def test_operation_log_fail_is_terminal(spark, tmp_path):
+    """fail() writes an error event and a terminal `failed` status: the
+    same (name, project, scenario) may start again, and finish — from
+    the failing instance or another one — rejects the failed op."""
+    ol = OperationLog(spark, str(tmp_path))
+    op = ol.start("crashy", project_id=1, scenario_id=1)
+    ol.fail(op, ValueError("boom"))
+    last = ol.last_log(op)
+    assert last["code"] == "error"
+    assert json.loads(last["data"]) == {"message": "boom", "error": "ValueError"}
+    for other in (ol, OperationLog(spark, str(tmp_path))):
+        with pytest.raises(RuntimeError, match="already failed"):
+            other.finish(op)
+    status = {r["op_id"]: r["status"] for r in ol.current_status().collect()}
+    assert status == {op: "failed"}
+    assert OperationLog(spark, str(tmp_path)).start("crashy", 1, 1) == op + 1
 
 
 def test_stream_stream_interval_join_matches_batch(spark, tmp_path):

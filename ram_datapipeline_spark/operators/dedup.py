@@ -24,7 +24,10 @@ order ≡ numeric order.
 At 100 TB: the shingle explode multiplies rows ~token-count×, so every
 downstream agg uses map-side partial aggregation (groupBy on (doc, perm));
 the bucket join shuffles only (band, sig) keys — skew (a hot bucket) is
-handled by AQE skew-join splitting. Nothing collects to the driver.
+handled by AQE skew-join splitting. The one driver collect is the
+connected-components gate: ``limit(LOCAL_CC_MAX_EDGES + 1)`` rows of the
+pair list, never more. At or under the gate the components come from a
+driver-side union-find; over it the distributed pointer-jumping loop runs.
 """
 
 from __future__ import annotations
@@ -331,6 +334,58 @@ def near_dedup_survivors(
     )
 
 
+# At or below this many (induced) edges, connected components run as a
+# driver-side union-find over ONE bounded collect of the pair list: the
+# pointer-jumping loop below scheduled 14-21 jobs (2-3 s) even on 8- and
+# 21-edge graphs, all per-round overhead, while the union-find over 10^5
+# random edges takes ~0.3 s of Python (4-vCPU Xeon host). Above the gate
+# the distributed loop runs (same components).
+LOCAL_CC_MAX_EDGES = 100_000
+
+
+def _local_cc_relabel(pairs: DataFrame) -> DataFrame | None:
+    """Driver-side components of a SMALL pair graph, or None over the gate.
+
+    Collects at most ``LOCAL_CC_MAX_EDGES + 1`` (doc_a, doc_b) rows; more
+    than ``LOCAL_CC_MAX_EDGES`` means the graph is over the gate and the
+    caller must run the distributed loop. Otherwise a min-root union-find
+    (the smaller root always wins a union, so every root is its
+    component's minimum id) gives each endpoint its component, and the
+    result is (node, component) for the endpoints whose component is NOT
+    their own id — every other id maps to itself, which callers restore
+    with ``coalesce(component, id)``. Rows with a null endpoint are
+    skipped, as the loop's join skips them. The relabel rows ship as an
+    Arrow-backed local relation (``LocalTableScan``, also when empty), so
+    broadcasting them costs no Python worker."""
+    from ram_datapipeline_spark.session import local_rows_df
+
+    rows = pairs.select("doc_a", "doc_b").limit(LOCAL_CC_MAX_EDGES + 1).collect()
+    if len(rows) > LOCAL_CC_MAX_EDGES:
+        return None
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent.get(root, root) != root:
+            root = parent[root]
+        while x != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in rows:
+        if a is None or b is None:
+            continue
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    id_type = pairs.schema["doc_a"].dataType.simpleString()
+    return local_rows_df(
+        pairs.sparkSession,
+        [(v, find(v)) for v in parent],
+        f"node {id_type}, component {id_type}",
+    )
+
+
 def connected_components(
     pairs: DataFrame,
     nodes: DataFrame,
@@ -338,7 +393,44 @@ def connected_components(
     max_iters: int = 20,
 ) -> DataFrame:
     """Transitive-closure duplicate clusters: (id, component) where
-    component = min id reachable through the pair graph.
+    component = min id reachable through the pair graph induced on
+    ``nodes`` (an edge with an endpoint outside ``nodes`` is ignored);
+    one row per distinct non-null id.
+
+    The pair list is first restricted to the induced subgraph (two
+    semi-joins against ``nodes``) and handed to the gate
+    (:func:`_local_cc_relabel`, one bounded collect). At or under
+    ``LOCAL_CC_MAX_EDGES`` edges the result is the distinct ``nodes``
+    left-joined to the broadcast relabel map, ``coalesce(component,
+    id)`` — no iteration, no further driver round trip. Over the gate
+    the distributed pointer-jumping loop
+    (:func:`_pointer_jumping_components`) runs on the original pairs.
+    """
+    ids = nodes.select(F.col(id_col)).where(F.col(id_col).isNotNull())
+    induced = pairs.join(
+        ids.select(F.col(id_col).alias("doc_a")), "doc_a", "leftsemi"
+    ).join(ids.select(F.col(id_col).alias("doc_b")), "doc_b", "leftsemi")
+    relab = _local_cc_relabel(induced)
+    if relab is None:
+        return _pointer_jumping_components(pairs, nodes, id_col, max_iters)
+    rmap = relab.select(F.col("node").alias("_old"), F.col("component").alias("_new"))
+    id_type = nodes.schema[id_col].dataType
+    return ids.distinct().join(
+        F.broadcast(rmap), F.col(id_col) == F.col("_old"), "left"
+    ).select(
+        F.col(id_col),
+        F.coalesce(F.col("_new").cast(id_type), F.col(id_col)).alias("component"),
+    )
+
+
+def _pointer_jumping_components(
+    pairs: DataFrame,
+    nodes: DataFrame,
+    id_col: str = "doc_id",
+    max_iters: int = 20,
+) -> DataFrame:
+    """Distributed form of :func:`connected_components`, for pair graphs
+    over the driver gate.
 
     Iterative min-label propagation: each round every node adopts the
     smallest label in its neighborhood (including its own); convergence
@@ -359,7 +451,6 @@ def connected_components(
         )
         .distinct()
     )
-    sym.persist()
     labels = nodes.select(
         F.col(id_col).alias("node"), F.col(id_col).alias("label")
     )
@@ -430,19 +521,22 @@ def connected_components(
     # halves the count jobs at the cost of at most one wasted round of
     # bounded (identity) work past the fixpoint. Rounds past the
     # fixpoint are the identity, so the emitted labels are unchanged.
-    r = 0
-    while r < max_iters:
-        stepped = propagate(labels).localCheckpoint(eager=False)
-        new_labels = jump(stepped).localCheckpoint(eager=False)
-        labels = new_labels.select("node", "label")
-        r += 1
-        if r % 2 == 0 or r >= max_iters:
-            changed = new_labels.filter(
-                F.col("label") != F.col("old_label")
-            ).count()
-            if changed == 0:
-                break
-    sym.unpersist()
+    sym.persist()  # released in the finally, also when a round raises
+    try:
+        r = 0
+        while r < max_iters:
+            stepped = propagate(labels).localCheckpoint(eager=False)
+            new_labels = jump(stepped).localCheckpoint(eager=False)
+            labels = new_labels.select("node", "label")
+            r += 1
+            if r % 2 == 0 or r >= max_iters:
+                changed = new_labels.filter(
+                    F.col("label") != F.col("old_label")
+                ).count()
+                if changed == 0:
+                    break
+    finally:
+        sym.unpersist()
     return labels.select(F.col("node").alias(id_col), F.col("label").alias("component"))
 
 
@@ -1098,14 +1192,19 @@ def incremental_components(
 
     The trick is that the standing labels are already transitive: a
     corpus component can be collapsed to ONE super-node (its label =
-    its min id), so the only graph that needs propagation is the
-    batch-touched MINI graph — batch ids plus the labels of corpus
-    components the batch collides with (batch-scale, not
+    its min id), so the only graph that needs components is the
+    batch-touched MINI graph ``e`` — the batch-incident edges with each
+    corpus endpoint replaced by its label (batch-scale, not
     corpus-scale). Corpus components merged through a batch document
     (A — batch — B) fall out naturally: both labels land in one mini
-    component. The final corpus-side patch is a broadcast join of the
-    mini-sized relabel map against the labels table — map-only, the
-    corpus never shuffles.
+    component. Every endpoint of ``e`` is a mini-graph node by
+    construction, so ``e`` goes straight to the driver gate
+    (:func:`_local_cc_relabel`, one bounded collect + a union-find);
+    only a mini graph over ``LOCAL_CC_MAX_EDGES`` edges runs the
+    distributed loop on its endpoints. Either way the result is a
+    relabel map (old id → component), and the corpus-side patch and the
+    batch verdict are broadcast joins of it — map-only, the corpus never
+    shuffles.
 
     Identity: because LSH collisions are pairwise, the corpus-internal
     edge set at refresh time equals the one the standing labels were
@@ -1132,26 +1231,29 @@ def incremental_components(
         )
         .where(F.col("doc_a") != F.col("doc_b"))
     )
-    nodes = (
-        batch_nodes.select(F.col(id_col))
-        .unionByName(e.select(F.col("doc_a").alias(id_col)))
-        .unionByName(e.select(F.col("doc_b").alias(id_col)))
-        .distinct()
-    )
-    mini = connected_components(e, nodes, id_col=id_col, max_iters=max_iters)
-    relab = mini.select(
-        F.col(id_col).alias("_old"), F.col("component").alias("_new")
+    relab = _local_cc_relabel(e)
+    if relab is None:
+        ends = (
+            e.select(F.col("doc_a").alias(id_col))
+            .unionByName(e.select(F.col("doc_b").alias(id_col)))
+            .distinct()
+        )
+        relab = _pointer_jumping_components(e, ends, id_col, max_iters).select(
+            F.col(id_col).alias("node"), "component"
+        )
+    rmap = F.broadcast(
+        relab.select(F.col("node").alias("_old"), F.col("component").alias("_new"))
     )
     patched = labels.join(
-        F.broadcast(relab), F.col(component_col) == F.col("_old"), "left"
+        rmap, F.col(component_col) == F.col("_old"), "left"
     ).select(
         F.col(id_col),
         F.coalesce("_new", F.col(component_col)).alias(component_col),
     )
     batch_out = batch_nodes.select(F.col(id_col)).join(
-        F.broadcast(mini), id_col, "left"
+        rmap, F.col(id_col) == F.col("_old"), "left"
     ).select(
         F.col(id_col),
-        F.coalesce("component", F.col(id_col)).alias(component_col),
+        F.coalesce("_new", F.col(id_col)).alias(component_col),
     )
     return patched.unionByName(batch_out)

@@ -86,7 +86,12 @@ def _kernel_partitions(df: DataFrame) -> int:
 
     probe = os.environ.get("SPARK_GRAFT_KERNEL_PARTS")
     if probe:
-        return max(1, int(probe))
+        try:
+            return max(1, int(probe))
+        except ValueError:
+            raise ValueError(
+                f"SPARK_GRAFT_KERNEL_PARTS must be an integer, got {probe!r}"
+            ) from None
     return max(1, df.sparkSession.sparkContext.defaultParallelism // 4)
 
 # Per-cell closure runs a dense n³ numpy squaring; this caps the memory a

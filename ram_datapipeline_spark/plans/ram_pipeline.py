@@ -155,7 +155,10 @@ def _analyse_and_write(
     # running back-to-back; submit them from a small thread pool so each
     # sink's write tasks back-fill the executor slots the previous sink's
     # tail leaves idle (guide §2.6 overlap independent jobs). Outputs are
-    # byte-identical — only the submission order changes.
+    # byte-identical — only the submission order changes. After the first
+    # failure no queued sink starts: a freed pool thread would otherwise
+    # pick up the next sink and keep writing for an op that has failed.
+    import threading
     from concurrent.futures import ThreadPoolExecutor
 
     flat = sinks.flatten_poi_map(results)
@@ -180,9 +183,26 @@ def _analyse_and_write(
             {"key": "res_gen_at", "project": "1", "scenario": "1"},
         ),
     ]
+    failed = threading.Event()
+
+    def run_sink(job) -> None:
+        if failed.is_set():
+            return
+        try:
+            job()
+        except BaseException:
+            failed.set()
+            raise
+
     with ThreadPoolExecutor(max_workers=3) as pool:
-        for done in [pool.submit(j) for j in sink_jobs]:
-            done.result()  # propagate the first failure, if any
+        futures = [pool.submit(run_sink, j) for j in sink_jobs]
+        try:
+            for done in futures:
+                done.result()  # propagate the first failure, if any
+        except BaseException:
+            for f in futures:
+                f.cancel()  # no-op on a sink already running or done
+            raise
 
     return {
         "origins": origins,

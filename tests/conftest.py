@@ -26,6 +26,37 @@ def spark():
     yield s
 
 
+@pytest.fixture(params=["local", "loop", "boundary"])
+def cc_path(request, monkeypatch):
+    """Runs a connected-components test once per path: ``local`` keeps the
+    default driver gate (union-find), ``loop`` sets the gate to 0 so the
+    distributed pointer-jumping loop runs, ``boundary`` sets the gate to
+    exactly the graph's edge count (the inclusive edge of the union-find
+    path). Call ``cc_path.gate(n_edges)`` before running the operator;
+    ``cc_path.loop_calls`` counts the loop's runs."""
+    from ram_datapipeline_spark.operators import dedup
+
+    real_loop = dedup._pointer_jumping_components
+
+    class Path:
+        mode = request.param
+        loop_calls = 0
+
+        @staticmethod
+        def gate(n_edges: int) -> None:
+            if request.param == "loop":
+                monkeypatch.setattr(dedup, "LOCAL_CC_MAX_EDGES", 0)
+            elif request.param == "boundary":
+                monkeypatch.setattr(dedup, "LOCAL_CC_MAX_EDGES", n_edges)
+
+    def counting_loop(*args, **kwargs):
+        Path.loop_calls += 1
+        return real_loop(*args, **kwargs)
+
+    monkeypatch.setattr(dedup, "_pointer_jumping_components", counting_loop)
+    return Path
+
+
 @pytest.fixture(scope="session")
 def duck():
     con = duckdb.connect()

@@ -48,18 +48,65 @@ def test_ivf_recall_vs_exact(spark):
     assert recall >= 0.45, f"IVF recall {recall:.2f} too low"
 
 
-def test_connected_components_chain(spark):
+_CC_CHAIN = {1: 1, 2: 1, 3: 1, 4: 4, 5: 5, 6: 5, 7: 7}
+
+
+@pytest.mark.parametrize(
+    "extra_pairs, extra_nodes",
+    [
+        ([], []),
+        # 99 is not a node: the edges through it are ignored, so 4 is
+        # not pulled into component 1; duplicate node ids give one row
+        # per id
+        ([(3, 99), (99, 4)], [2, 5, 5]),
+    ],
+    ids=["chain", "outside_edge_duplicate_nodes"],
+)
+def test_connected_components_chain(spark, cc_path, extra_pairs, extra_nodes):
     """A~B, B~C (but A!~C) must land in ONE component — the chain case the
     greedy lower-id policy cannot express; isolated nodes keep their own
-    id as component."""
+    id as component. Same rows on the driver union-find, the distributed
+    loop, and at the gate's boundary."""
     from ram_datapipeline_spark.operators.dedup import connected_components
 
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (5, 6)], "doc_a long, doc_b long"
+    pair_rows = [(1, 2), (2, 3), (5, 6)] + extra_pairs
+    cc_path.gate(len(pair_rows) - len(extra_pairs))  # induced edges
+    pairs = spark.createDataFrame(pair_rows, "doc_a long, doc_b long")
+    nodes = spark.createDataFrame(
+        [(i,) for i in list(range(1, 8)) + extra_nodes], "doc_id long"
     )
-    nodes = spark.createDataFrame([(i,) for i in range(1, 8)], "doc_id long")
-    out = {r["doc_id"]: r["component"] for r in connected_components(pairs, nodes).collect()}
-    assert out == {1: 1, 2: 1, 3: 1, 4: 4, 5: 5, 6: 5, 7: 7}
+    rows = connected_components(pairs, nodes).collect()
+    assert len(rows) == len(_CC_CHAIN)
+    assert {r["doc_id"]: r["component"] for r in rows} == _CC_CHAIN
+    assert cc_path.loop_calls == (1 if cc_path.mode == "loop" else 0)
+
+
+def test_connected_components_loop_releases_edge_cache_on_failure(
+    spark, monkeypatch
+):
+    """A round that raises must not leave the loop's persisted edge
+    table behind. The per-round local checkpoints are not counted: they
+    are freed by the ContextCleaner once unreferenced, not by the loop."""
+    from ram_datapipeline_spark.operators import dedup
+
+    def cached_rdds():
+        return {
+            k for k, v in spark.sparkContext._jsc.getPersistentRDDs().items()
+            if not v.rdd().isLocallyCheckpointed()
+        }
+
+    def failing_count(self):
+        raise RuntimeError("round failed")
+
+    monkeypatch.setattr(dedup, "LOCAL_CC_MAX_EDGES", 0)
+    pairs = spark.createDataFrame([(1, 2), (2, 3)], "doc_a long, doc_b long")
+    nodes = spark.createDataFrame([(i,) for i in range(1, 5)], "doc_id long")
+    before = cached_rdds()
+    monkeypatch.setattr(type(pairs), "count", failing_count)
+    with pytest.raises(RuntimeError, match="round failed"):
+        dedup.connected_components(pairs, nodes)
+    monkeypatch.undo()
+    assert cached_rdds() == before
 
 
 def test_asof_join_edges(spark):
@@ -892,7 +939,7 @@ def test_profile_table_counts_nulls_distincts_bounds(spark):
     assert (prof["code"]["min_num"], prof["code"]["max_num"]) == (3.0, 11.0)
 
 
-def test_canonical_pick_keeps_best_per_cluster(spark):
+def test_canonical_pick_keeps_best_per_cluster(spark, cc_path):
     """Quality argmax per component (ties → lowest id); singletons keep
     themselves; exactly one is_kept per component."""
     from ram_datapipeline_spark.operators.dedup import (
@@ -900,6 +947,7 @@ def test_canonical_pick_keeps_best_per_cluster(spark):
         connected_components,
     )
 
+    cc_path.gate(3)
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6)], "doc_a long, doc_b long"
     )

@@ -117,11 +117,13 @@ def test_incremental_empty_corpus_and_empty_batch(spark):
     assert empty.columns == ["doc_id", "is_dup", "dup_of"]
 
 
-def test_incremental_components_bridge_merges_corpus_clusters(spark):
+def test_incremental_components_bridge_merges_corpus_clusters(spark, cc_path):
     """The hard case: a single batch document collides with TWO standing
     corpus clusters — incremental maintenance must merge them (and
     relabel the losing cluster's members) exactly as a full recompute
-    over corpus ∪ batch does."""
+    over corpus ∪ batch does. At the ``boundary`` gate the batch's mini
+    graph sits exactly at the gate while the full recompute is over it,
+    so the two paths are compared against each other."""
     from ram_datapipeline_spark.operators.dedup import (
         connected_components,
         incremental_components,
@@ -147,11 +149,12 @@ def test_incremental_components_bridge_merges_corpus_clusters(spark):
     write_minhash_index(
         minhash_band_index(corpus), "tmp_inc_cc_idx", n_buckets=4
     )
+    edges = incremental_lsh_candidates(batch, spark.table("tmp_inc_cc_idx"))
+    cc_path.gate(edges.count())  # the mini graph keeps one edge per pair
     write_labels_table(
         connected_components(minhash_lsh_pairs(corpus), corpus),
         "tmp_inc_cc_lab",
     )
-    edges = incremental_lsh_candidates(batch, spark.table("tmp_inc_cc_idx"))
     got = {
         r.doc_id: r.component
         for r in incremental_components(
@@ -164,8 +167,9 @@ def test_incremental_components_bridge_merges_corpus_clusters(spark):
             minhash_lsh_pairs(docs), docs
         ).collect()
     }
-    assert got == want
-    # the bridge really merged the two corpus clusters
-    assert want[3] == 1 and want[4] == 1 and want[11] == 1
-    # the isolated batch doc stays its own component
-    assert got[12] == 12
+    # the bridge really merged the two corpus clusters, and the isolated
+    # batch doc stays its own component
+    assert got == want == {1: 1, 2: 1, 3: 1, 4: 1, 11: 1, 12: 12}
+    # loop runs among: corpus labels, mini graph, full recompute
+    want_loops = {"local": 0, "boundary": 1, "loop": 3}[cc_path.mode]
+    assert cc_path.loop_calls == want_loops

@@ -818,9 +818,10 @@ def test_incremental_components_gate_patch_is_broadcast(spark):
     the patch), and nothing is pairwise."""
     p = plan_text(spark, "dedup_incremental_components")
     # The standing labels table is patched lazily in the final plan; the
-    # band index is consumed at BUILD time (the batch-scale mini-CC runs
-    # eagerly into checkpoints — r10's pointer-jumping loop), so it
-    # appears in the probe stage, not here.
+    # band index is consumed at BUILD time (the batch-scale mini graph's
+    # edges are collected once by the driver gate and its components
+    # come back as a local relabel map), so it appears in that collect,
+    # not here.
     assert "dedup_inc_cc_labels" in p
     assert n_ops(p, "CartesianProduct") == 0
     assert n_ops(p, "BroadcastNestedLoopJoin") == 0

@@ -90,3 +90,42 @@ def test_pipeline_failure_marks_op_failed(spark, tmp_path, monkeypatch):
     assert last["code"] == "error"
     assert json.loads(last["data"]) == {"message": "disk full", "error": "OSError"}
     assert ol.start("generate-analysis", 1, 1) == status[0]["op_id"] + 1
+
+
+def test_pipeline_sink_failure_stops_queued_sinks(spark, tmp_path, monkeypatch):
+    """The first sink fails while the next two are still writing (held on
+    an Event): the two sinks still queued behind them never start, and
+    the op ends `failed`."""
+    import threading
+
+    all_running = threading.Barrier(3)
+    release = threading.Event()
+    held, started = [], []
+
+    def failing_sink(*args, **kwargs):
+        all_running.wait(30)
+        # let the held sinks finish only after the failure has been seen
+        threading.Timer(1.0, release.set).start()
+        raise OSError("disk full")
+
+    def held_sink(*args, **kwargs):
+        all_running.wait(30)
+        assert release.wait(30)
+        held.append(1)
+
+    def queued_sink(name):
+        def sink(*args, **kwargs):
+            started.append(name)
+        return sink
+
+    monkeypatch.setattr(sinks, "write_results_normalized", failing_sink)
+    monkeypatch.setattr(sinks, "write_csv", held_sink)
+    monkeypatch.setattr(sinks, "write_json_grouped", held_sink)
+    monkeypatch.setattr(sinks, "write_geojson_seq", queued_sink("geojson"))
+    monkeypatch.setattr(sinks, "append_metadata_event", queued_sink("meta"))
+    out = str(tmp_path / "out_stop")
+    with pytest.raises(OSError, match="disk full"):
+        run_ram_pipeline(spark, SF_DIR, out, selected_aa_ids=[1])
+    assert len(held) == 2 and started == []
+    status = OperationLog(spark, f"{out}/oplog").current_status().collect()
+    assert len(status) == 1 and status[0]["status"] == "failed"

@@ -21,7 +21,8 @@ Catalyst turns into a shuffle-free broadcast plan when the POI side is small.
 
 Scale strategy (100 TB): POI/dimension sides are broadcast (they are small
 relative to origins by construction — hospitals, banks). Origins-side
-parallelism comes from whatever partitioning the scan yields; the grid path
+parallelism comes from one coalescible hash shuffle of the origin rows
+ahead of the cross join (``nearest_poi_eta``); the grid path
 (``nearest_poi_eta_grid``) shuffles both sides once on the cell key and joins
 each origin cell against its 3×3 cell neighborhood, bounding the candidate
 set per origin regardless of total POI count — the scalable analog of the
@@ -34,6 +35,29 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ram_datapipeline_spark.functions import geo
+
+
+def _cost_pairs(
+    origins: DataFrame,
+    pois: DataFrame,
+    speed_kmh: float,
+    broadcast_pois: bool = True,
+) -> DataFrame:
+    """``origins`` × ``pois`` with the straight-line ``duration_s`` per
+    pair, in whatever partitioning ``origins`` arrives with."""
+    p = pois.select(
+        F.col("poi_id"),
+        F.col("poi_type"),
+        F.col("lon").alias("_poi_lon"),
+        F.col("lat").alias("_poi_lat"),
+    )
+    if broadcast_pois:
+        p = F.broadcast(p)
+    dur = geo.eta_seconds(
+        F.col("lon"), F.col("lat"), F.col("_poi_lon"), F.col("_poi_lat"), speed_kmh
+    )
+    pairs = origins.crossJoin(p)
+    return pairs.withColumn("duration_s", dur).drop("_poi_lon", "_poi_lat")
 
 
 def duration_matrix(
@@ -51,23 +75,11 @@ def duration_matrix(
     backend; a road-network backend drops in via ``mapInPandas`` over the
     same long format (see ``routed_duration_matrix``).
     """
-    p = pois.select(
-        F.col("poi_id"),
-        F.col("poi_type"),
-        F.col("lon").alias("_poi_lon"),
-        F.col("lat").alias("_poi_lat"),
-    )
-    if broadcast_pois:
-        p = F.broadcast(p)
     from ram_datapipeline_spark.session import ensure_parallelism
 
     # the crossJoin multiplies each origin row |pois|×; a single-partition
     # origins scan would serialize the whole cost evaluation
-    pairs = ensure_parallelism(origins).crossJoin(p)
-    dur = geo.eta_seconds(
-        F.col("lon"), F.col("lat"), F.col("_poi_lon"), F.col("_poi_lat"), speed_kmh
-    )
-    return pairs.withColumn("duration_s", dur).drop("_poi_lon", "_poi_lat")
+    return _cost_pairs(ensure_parallelism(origins), pois, speed_kmh, broadcast_pois)
 
 
 def min_duration(
@@ -97,12 +109,20 @@ def nearest_poi_eta(
 ) -> DataFrame:
     """Flagship: per origin, ETA (s) to the nearest POI of each type.
 
-    scan → crossJoin(broadcast POIs) → cost → groupBy.min. One shuffle
-    (the groupBy), and with AQE the partial (map-side) min makes the shuffle
-    carry only one row per (origin, type) per task.
+    scan → hash shuffle of the origins on ``origin_keys[0]`` →
+    crossJoin(broadcast POIs) → cost → groupBy.min. The shuffle is the
+    plan's only data exchange: the min-reduce groups by keys that start
+    with the shuffle key, so Catalyst plans it (and any further aggregate
+    grouped by a superset of that key) inside the same stage. It carries
+    origin rows, not the |pois|× matrix, and has no partition count, so
+    AQE coalesces it: a small origin set stays one task, while one above
+    ~1 MB per core still splits at least ``defaultParallelism`` ways.
+    Unlike a round-robin spread behind a partition-count probe, nothing
+    runs before the action.
     """
     origin_keys = origin_keys or ["origin_id"]
-    m = duration_matrix(origins, pois, speed_kmh=speed_kmh)
+    spread = origins.repartition(origin_keys[0])
+    m = _cost_pairs(spread, pois, speed_kmh)
     return min_duration(m, origin_keys, unreachable_over_s)
 
 

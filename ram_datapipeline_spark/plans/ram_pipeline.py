@@ -6,11 +6,15 @@ OSRM matrix calls → result assembly → transactional DB insert + CSV/JSON/
 GeoJSON exports → metadata touches → operation finish.
 
 Spark restatement (SURVEY §3.1 "Spark mapping"): stages 3-8 are a single
-lazy DAG — scan → pivot indicators → admin-area filter → point-in-polygon →
-candidate pruning → duration matrix → min-reduce → walk penalty → map
-assembly — evaluated once, fanned out to four sinks. The fork/parallelLimit
-machinery (index.js:89-96, 392-408) does not exist: partitioning IS the
-parallelism; progress IPC becomes OperationLog rows.
+lazy DAG — scan (origins with their indicators) → point-in-polygon →
+origin hash shuffle → cost → min-reduce → poi-map assembly — evaluated
+once into ONE local checkpoint, which also observes the dynamic POI-type
+list, then fanned out to the sinks. Each stage runs once: the origin
+columns the results carry (lon, lat, pop) ride through both aggregates as
+group keys, so nothing joins back to the point-in-polygon output, and the
+one shuffle partitions on the origin key both aggregates group by. The
+fork/parallelLimit machinery (index.js:89-96, 392-408) does not exist:
+partitioning IS the parallelism; progress IPC becomes OperationLog rows.
 
 Everything here composes operators that are independently oracle-checked in
 the suite; this module adds no new semantics, only the reference's
@@ -21,34 +25,17 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ram_datapipeline_spark import ram_domain, sinks
 from ram_datapipeline_spark.catalog import load_tables
 from ram_datapipeline_spark.operators import eta as ETA
-from ram_datapipeline_spark.operators import relational as R
 from ram_datapipeline_spark.operators import spatial as SP
 from ram_datapipeline_spark.streaming import OperationLog
 
 MAX_TIME_S = 1800.0  # reference maxTime (index.js:80)
 MAX_SPEED_KMH = 120.0  # reference maxSpeed (index.js:79)
-
-
-def _origin_indicators(customer: DataFrame) -> DataFrame:
-    """EAV indicator rows for the pivot stage (A2): the reference stores
-    per-origin indicators long-format (projects_origins_indicators,
-    index.js:233-246); here customer attributes play that role."""
-    return customer.select(
-        F.col("c_custkey").alias("origin_id"),
-        F.explode(
-            F.create_map(
-                F.lit("pop"), F.col("c_acctbal").cast("double"),
-                F.lit("segment_len"),
-                F.length("c_mktsegment").cast("double"),
-            )
-        ).alias("key", "value"),
-    )
 
 
 def run_ram_pipeline(
@@ -88,6 +75,63 @@ def run_ram_pipeline(
     return dfs
 
 
+def analysis_plan(
+    spark: SparkSession,
+    sf_dir: str,
+    selected_aa_ids: list[int] | None = None,
+    max_time_s: float = MAX_TIME_S,
+    max_speed_kmh: float = MAX_SPEED_KMH,
+) -> dict[str, DataFrame]:
+    """The lazy analysis DAG up to ``results`` — one row per origin in a
+    selected area: (origin_id, aa_id, lon, lat, pop, poi) with ``poi`` the
+    type → ETA map — not yet evaluated."""
+    # -- input acquisition (S1-S5) + origin indicators (A2) ----------------
+    # The reference stores per-origin indicators long-format and pivots
+    # them back (projects_origins_indicators, index.js:233-246); here they
+    # are attributes of the customer row itself, so they are projected off
+    # that row. The pivot operator stays oracle-checked by a2_pivot_eav.
+    t = load_tables(spark, sf_dir)
+    origins = ram_domain.origins(
+        t["customer"], F.col("c_acctbal").cast("double").alias("pop")
+    )
+    pois = ram_domain.pois(t["supplier"])
+    areas = ram_domain.admin_areas(t["nation"])
+    if selected_aa_ids is not None:
+        areas = areas.filter(F.col("aa_id").isin(selected_aa_ids))
+
+    # -- spatial stage: origins inside selected areas (J2) -----------------
+    in_area = SP.points_in_rect_areas(origins, areas)
+
+    # -- candidate pruning (J3 analog) + routing kernel (J4) + A1/F4 -------
+    # service radius in degrees ≈ maxTime * maxSpeed (reference buffer,
+    # utils.js:47-58); POIs beyond it are unreachable by construction.
+    # The result columns ride along as group keys behind origin_id (the
+    # shuffle key), so no stage joins back to in_area.
+    keys = ["origin_id", "aa_id", "lon", "lat", "pop"]
+    eta = ETA.nearest_poi_eta(
+        in_area.select(*keys),
+        pois,
+        origin_keys=keys,
+        speed_kmh=max_speed_kmh,
+        unreachable_over_s=max_time_s,
+    )
+
+    # -- result assembly: per-origin poi map (index.js:100-120) ------------
+    results = eta.groupBy(*keys).agg(
+        F.map_from_entries(
+            F.array_sort(F.collect_list(F.struct("poi_type", "eta_s")))
+        ).alias("poi")
+    )
+    return {
+        "origins": origins,
+        "pois": pois,
+        "areas": areas,
+        "in_area": in_area,
+        "eta": eta,
+        "results": results,
+    }
+
+
 def _analyse_and_write(
     spark: SparkSession,
     sf_dir: str,
@@ -100,54 +144,28 @@ def _analyse_and_write(
 ) -> dict[str, DataFrame]:
     """The analysis DAG and its five sinks, logging progress to op
     ``op`` of ``ol``."""
-    # -- input acquisition (S1-S5) + indicator pivot (A2) ------------------
-    t = load_tables(spark, sf_dir)
-    origins = ram_domain.origins(t["customer"])
-    ind = R.pivot_eav(
-        _origin_indicators(t["customer"]),
-        ["origin_id"],
-        "key",
-        F.first("value"),
-        ["pop", "segment_len"],
-    )
-    origins = origins.join(ind, "origin_id", "left")
-    pois = ram_domain.pois(t["supplier"])
-    areas = ram_domain.admin_areas(t["nation"])
-    if selected_aa_ids is not None:
-        areas = areas.filter(F.col("aa_id").isin(selected_aa_ids))
-
-    # -- spatial stage: origins inside selected areas (J2) -----------------
-    in_area = SP.points_in_rect_areas(origins, areas)
-
-    # -- candidate pruning (J3 analog) + routing kernel (J4) + A1/F4 -------
-    # service radius in degrees ≈ maxTime * maxSpeed (reference buffer,
-    # utils.js:47-58); POIs beyond it are unreachable by construction
-    eta = ETA.nearest_poi_eta(
-        in_area,
-        pois,
-        origin_keys=["origin_id", "aa_id"],
-        speed_kmh=max_speed_kmh,
-        unreachable_over_s=max_time_s,
-    )
+    dfs = analysis_plan(spark, sf_dir, selected_aa_ids, max_time_s, max_speed_kmh)
     ol.log(op, "process:areas", {"message": "routing complete"})
 
-    # -- result assembly: per-origin poi map (index.js:100-120) ------------
-    poi_map = eta.groupBy("origin_id", "aa_id").agg(
-        F.map_from_entries(
-            F.array_sort(F.collect_list(F.struct("poi_type", "eta_s")))
-        ).alias("poi")
+    # Evaluate the analysis ONCE and fan the materialized rows out to the
+    # sinks — without this each write re-runs the PIP → eta matrix chain
+    # (measured ~4× the analysis cost at bench scale). The result table is
+    # output-sized (one row per origin), so the local checkpoint is the
+    # natural artifact boundary the reference's in-memory result array
+    # occupies (index.js:100-120). The same pass observes the distinct
+    # POI types the CSV/GeoJSON columns are named after, so the dynamic
+    # schema costs no job of its own, and the normalized sink keys this
+    # checkpoint directly (sinks.split_results_normalized).
+    types = Observation("poi_types")
+    results = (
+        dfs["results"]
+        .observe(
+            types,
+            F.array_distinct(F.flatten(F.collect_set(F.map_keys("poi")))).alias("t"),
+        )
+        .localCheckpoint()
     )
-    results = poi_map.join(
-        in_area.select("origin_id", "aa_id", "lon", "lat", "pop"),
-        ["origin_id", "aa_id"],
-    )
-    # evaluate the analysis ONCE and fan the materialized rows out to the
-    # four sinks — without this each write re-runs the pivot → PIP → eta
-    # matrix chain (measured ~4× the analysis cost at bench scale). The
-    # result table is output-sized (one row per origin), so the local
-    # checkpoint is the natural artifact boundary the reference's
-    # in-memory result array occupies (index.js:100-120).
-    results = results.localCheckpoint()
+    flat = sinks.flatten_poi_map(results, sorted(types.get["t"]))
 
     # -- sinks (K1-K5) -----------------------------------------------------
     # The five sinks all read the SAME checkpointed results table and
@@ -161,7 +179,6 @@ def _analyse_and_write(
     import threading
     from concurrent.futures import ThreadPoolExecutor
 
-    flat = sinks.flatten_poi_map(results)
     sink_jobs = [
         lambda: sinks.write_results_normalized(
             results,
@@ -204,12 +221,4 @@ def _analyse_and_write(
                 f.cancel()  # no-op on a sink already running or done
             raise
 
-    return {
-        "origins": origins,
-        "pois": pois,
-        "areas": areas,
-        "in_area": in_area,
-        "eta": eta,
-        "results": results,
-        "flat": flat,
-    }
+    return {**dfs, "results": results, "flat": flat}

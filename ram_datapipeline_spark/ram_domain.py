@@ -17,7 +17,7 @@ never drift apart.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ram_datapipeline_spark.functions import geo
@@ -57,13 +57,15 @@ ADMIN_AREAS_SQL = (
 )
 
 
-def origins(customer: DataFrame) -> DataFrame:
-    """Origins view: (origin_id, admin_id, lon, lat)."""
+def origins(customer: DataFrame, *extra: Column) -> DataFrame:
+    """Origins view: (origin_id, admin_id, lon, lat), then any ``extra``
+    columns projected off the same customer row."""
     return customer.select(
         F.col("c_custkey").alias("origin_id"),
         F.col("c_nationkey").alias("admin_id"),
         geo.synth_lon(F.col("c_custkey"), ORIGIN_LON_MULT).alias("lon"),
         geo.synth_lat(F.col("c_custkey"), ORIGIN_LAT_MULT).alias("lat"),
+        *extra,
     )
 
 

@@ -18,6 +18,7 @@ Spark scheduler. Tuning choices:
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -81,6 +82,18 @@ def local_rows_df(
         return spark.createDataFrame(rows, schema)
 
 
+def _env_knob(name: str, pattern: str, expected: str) -> str | None:
+    """``$name`` if set and non-empty, else None; a value that does not
+    match ``pattern`` raises ValueError naming the variable and the value,
+    before any session exists."""
+    value = os.environ.get(name)
+    if not value:
+        return None
+    if not re.fullmatch(pattern, value):
+        raise ValueError(f"{name} must be {expected}, got {value!r}")
+    return value
+
+
 def get_spark(
     app_name: str = "ram-datapipeline-spark",
     master: str | None = None,
@@ -92,14 +105,30 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` when the env var is
     set, else ``local[*]``. An existing active session is reused (Spark
     semantics); config applies on first creation.
+
+    Each environment knob it reads is checked before the session is
+    built, and a malformed one raises ValueError: ``SPARK_GRAFT_CPUS``
+    (a positive integer or ``*``), ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` (a
+    positive integer), ``SPARK_GRAFT_DRIVER_MEM`` (a JVM size such as
+    ``2g``).
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS")
-        master = f"local[{cpus}]" if cpus else "local[*]"
+        cpus = _env_knob(
+            "SPARK_GRAFT_CPUS", r"[1-9]\d*|\*", "a positive integer or '*'"
+        )
+        master = f"local[{cpus or '*'}]"
     if shuffle_partitions is None:
         shuffle_partitions = int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
+            _env_knob(
+                "SPARK_GRAFT_SHUFFLE_PARTITIONS", r"[1-9]\d*", "a positive integer"
+            )
+            or DEFAULT_SHUFFLE_PARTITIONS
         )
+    driver_mem = _env_knob(
+        "SPARK_GRAFT_DRIVER_MEM",
+        r"[1-9]\d*[kKmMgGtT]?",
+        "a JVM size such as '2g' or '512m'",
+    )
 
     builder = (
         SparkSession.builder.master(master)
@@ -119,7 +148,7 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", driver_mem or "8g")
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -36,6 +36,12 @@ def with_surrogate_keys(results: DataFrame, key_col: str = "result_id") -> DataF
     return results.withColumn(key_col, F.monotonically_increasing_id())
 
 
+def _is_checkpoint(df: DataFrame) -> bool:
+    """Is ``df`` a scan of materialized blocks (a checkpoint)?"""
+    plan = df._jdf.queryExecution().analyzed()
+    return plan.getClass().getSimpleName() == "LogicalRDD"
+
+
 def split_results_normalized(
     results: DataFrame,
     poi_map_col: str = "poi",
@@ -49,18 +55,27 @@ def split_results_normalized(
     Null map entries (unreachable) survive the explode as null eta — same
     semantics as `o.poi[k] === null` handling at `index.js:111-114`.
 
-    The keyed frame is MATERIALIZED (localCheckpoint) before splitting:
-    parent and child are written by separate jobs, and
-    ``monotonically_increasing_id`` depends on the physical row layout a
-    shuffle upstream does not reproduce run-to-run — without the
-    materialization the two writes can assign DIFFERENT keys to the same
-    logical row, silently breaking the FK relation (caught by the
-    ``k1_normalized_roundtrip`` gate re-joining the written tables). This
-    is the engine's analog of the reference serializing through
-    `RETURNING id` (index.js:122-135): key assignment must happen exactly
-    once.
+    Key assignment must happen exactly once — the engine's analog of the
+    reference serializing through `RETURNING id` (index.js:122-135):
+    parent and child are written by separate jobs, and both must see the
+    same key for the same logical row. ``monotonically_increasing_id``
+    is a function of the physical row layout (partition id, position in
+    partition), so:
+
+    - when ``results`` is already a checkpoint (its analyzed plan is a
+      ``LogicalRDD``, e.g. from ``localCheckpoint``), its partitions and
+      their row order are fixed blocks that every job re-reads the same
+      way, and the keys are assigned over them directly — no extra job;
+    - otherwise the keyed frame is MATERIALIZED (localCheckpoint) before
+      splitting: a shuffle upstream does not reproduce its row layout
+      run-to-run, and without the materialization the two writes can
+      assign DIFFERENT keys to the same logical row, silently breaking
+      the FK relation (caught by the ``k1_normalized_roundtrip`` gate
+      re-joining the written tables).
     """
-    keyed = with_surrogate_keys(results, key_col).localCheckpoint()
+    keyed = with_surrogate_keys(results, key_col)
+    if not _is_checkpoint(results):
+        keyed = keyed.localCheckpoint()
     parent = keyed.drop(poi_map_col)
     child = keyed.select(
         key_col, F.explode_outer(poi_map_col).alias("poi_type", "eta_s")

@@ -19,7 +19,8 @@ launches exactly three Spark jobs — the ``running`` append, one batched
 log flush, the ``complete`` append — and no read jobs:
 
 - both tables are read with their fixed schemas, so a read never runs a
-  parquet schema-inference job, and a missing table is known without one;
+  parquet schema-inference job, and a missing table is known from one
+  ``FileSystem.exists`` call, without a read attempt;
 - :meth:`OperationLog.start` reads nothing when the ``operations`` table
   does not exist (op_id 0, nothing can be running); otherwise the
   uniqueness guard and ``max(op_id)`` come from ONE aggregate action;
@@ -70,13 +71,21 @@ class OperationLog:
     # -- reads ------------------------------------------------------------
 
     def _read(self, path: str, cols: str) -> DataFrame | None:
+        # a missing table is the common case (every fresh log root), and
+        # one FileSystem.exists call answers it without a read attempt
+        # whose failure crosses py4j as a Java exception
+        jvm = self.spark.sparkContext._jvm
+        hpath = jvm.org.apache.hadoop.fs.Path(path)
+        fs = hpath.getFileSystem(self.spark.sparkContext._jsc.hadoopConfiguration())
+        if not fs.exists(hpath):
+            return None
         try:
             return (
                 self.spark.read.schema(f"{cols}, created_at timestamp")
                 .parquet(path)
             )
         except AnalysisException:
-            return None  # no events yet
+            return None  # exists, but holds no readable events yet
 
     def current_status(self) -> DataFrame:
         """Latest status event per op_id (W1): (op_id, name, project_id,

@@ -281,7 +281,7 @@ def q_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     survey=(
         "§3.1 END-TO-END pipeline parity in the hard signal: the full "
-        "ram-analysis job (S1-S5 inputs → A2 indicator pivot → J2 area "
+        "ram-analysis job (S1-S5 inputs → A2 origin indicators → J2 area "
         "join → J4/A1 matrix+min with the maxTime cutoff → result "
         "assembly → ALL K1-K5 sinks + operation log), returning the CSV "
         "sink re-read (index.js:36-191)"
@@ -292,7 +292,7 @@ def q_ram_full_job(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Runs ``plans.run_ram_pipeline`` — the whole reference lifecycle in
     one DAG, including the operation log and all four data sinks under a
     temp prefix (overwrite = K7) — then reads the CSV sink back and
-    returns it. The oracle replays indicator pivot, half-open rect
+    returns it. The oracle replays the origin indicators, half-open rect
     containment, the 1800 s unreachable cutoff (null ETAs survive the
     CSV round trip as nulls), and the eta_<type> flatten; a hash match
     is pipeline parity end to end, not per-operator."""

@@ -19,7 +19,10 @@ from tests.conftest import SF_DIR
 
 
 def plan_text(spark, name: str) -> str:
-    df = Q.REGISTRY[name].builder(spark, SF_DIR)
+    return explain_text(Q.REGISTRY[name].builder(spark, SF_DIR))
+
+
+def explain_text(df) -> str:
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
@@ -81,8 +84,24 @@ def test_q7_q8_wide_joins_all_dims_broadcast(spark):
 def test_eta_poi_side_broadcast(spark):
     p = plan_text(spark, "eta_nearest_poi")
     assert "BroadcastNestedLoopJoin" in p or "BroadcastHashJoin" in p
-    # one exchange: the min-reduce groupBy (plus the parallelism spread)
-    assert n_data_shuffles(p) <= 2
+    # one exchange: the origin hash shuffle, which the min-reduce reuses
+    assert n_data_shuffles(p) == 1
+    assert "REPARTITION_BY_COL" in p
+
+
+def test_ram_pipeline_computes_each_stage_once(spark):
+    """The plan the RAM job checkpoints runs point-in-polygon once, scans
+    customer once (indicators come off the origin row, no pivot joined
+    back), and shuffles once: the origin hash shuffle both aggregates
+    reuse. Nothing joins back to the point-in-polygon output."""
+    from ram_datapipeline_spark.plans.ram_pipeline import analysis_plan
+
+    p = explain_text(analysis_plan(spark, SF_DIR)["results"])
+    assert len(re.findall(r"BroadcastNestedLoopJoin Inner\b", p)) == 1, p
+    assert len(re.findall(r"^Location: .*/customer\.parquet\]", p, re.M)) == 1, p
+    assert n_data_shuffles(p) == 1, p
+    assert re.search(r"hashpartitioning\(origin_id#\d+L?, \d+\), REPARTITION_BY_COL", p), p
+    assert n_ops(p, "BroadcastHashJoin") == 0, p
 
 
 def test_text_quality_pure_map(spark):

@@ -129,3 +129,30 @@ def test_pipeline_sink_failure_stops_queued_sinks(spark, tmp_path, monkeypatch):
     assert len(held) == 2 and started == []
     status = OperationLog(spark, f"{out}/oplog").current_status().collect()
     assert len(status) == 1 and status[0]["status"] == "failed"
+
+
+def test_pipeline_warm_run_compiles_nothing(spark, tmp_path):
+    """A repeat of the job over an emptied output root — every warm
+    benchmark pass — finds all its generated code in the codegen cache:
+    no plan of the job carries a per-run value into generated code."""
+    import shutil
+
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiled = metrics.METRIC_COMPILATION_TIME()
+    out = str(tmp_path / "warm")
+    run_ram_pipeline(spark, SF_DIR, out, selected_aa_ids=[1])
+    shutil.rmtree(out)
+    before = compiled.getCount()
+    run_ram_pipeline(spark, SF_DIR, out, selected_aa_ids=[1])
+    assert compiled.getCount() - before == 0
+
+
+def test_pipeline_empty_selection_completes(spark, tmp_path):
+    """No selected area: the observed POI-type list is empty, so the run
+    writes zero results with no eta_* columns and still completes."""
+    out = str(tmp_path / "empty")
+    dfs = run_ram_pipeline(spark, SF_DIR, out, selected_aa_ids=[])
+    assert dfs["results"].count() == 0
+    assert not [c for c in dfs["flat"].columns if c.startswith("eta_")]
+    status = OperationLog(spark, f"{out}/oplog").current_status().collect()
+    assert [r["status"] for r in status] == ["complete"]

@@ -225,6 +225,32 @@ def test_operation_log_fresh_lifecycle_runs_three_jobs(spark, tmp_path):
     assert [(r["op_id"], r["status"]) for r in status] == [(0, "complete")]
 
 
+def test_operation_log_missing_table_is_not_read(spark, tmp_path, monkeypatch):
+    """A table that does not exist yet is known from the filesystem, not
+    from a failed read: with every DataFrame read disabled, both tables
+    read as None and the fresh lifecycle still runs its three appends."""
+    from ram_datapipeline_spark.streaming.oplog import LOGS_COLS, OPS_COLS
+
+    def no_read(session):
+        raise AssertionError("read attempted on a missing table")
+
+    monkeypatch.setattr(type(spark), "read", property(no_read))
+    ol = OperationLog(spark, str(tmp_path / "log"))
+    assert ol._read(ol.ops_path, OPS_COLS) is None
+    assert ol._read(ol.logs_path, LOGS_COLS) is None
+
+    def lifecycle():
+        op = ol.start("fresh", project_id=1, scenario_id=1)
+        ol.log(op, "start", {"message": "Analysis started"})
+        ol.finish(op)
+
+    group = f"oplog-missing-{tmp_path.name}"
+    assert _jobs_in_group(spark, group, lifecycle) == 3
+    monkeypatch.undo()
+    status = ol.current_status().collect()
+    assert [(r["op_id"], r["status"]) for r in status] == [(0, "complete")]
+
+
 def test_operation_log_second_instance(spark, tmp_path):
     """A second instance on the same root sees the first one's running
     op through the table: its start is refused, and its finish of an op

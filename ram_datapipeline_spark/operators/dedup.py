@@ -25,9 +25,10 @@ At 100 TB: the shingle explode multiplies rows ~token-count×, so every
 downstream agg uses map-side partial aggregation (groupBy on (doc, perm));
 the bucket join shuffles only (band, sig) keys — skew (a hot bucket) is
 handled by AQE skew-join splitting. The one driver collect is the
-connected-components gate: ``limit(LOCAL_CC_MAX_EDGES + 1)`` rows of the
-pair list, never more. At or under the gate the components come from a
-driver-side union-find; over it the distributed pointer-jumping loop runs.
+connected-components gate: ``session.bounded_collect`` of at most
+``LOCAL_CC_MAX_EDGES + 1`` rows of the pair list, never more. At or under
+the gate the components come from a driver-side union-find; over it the
+distributed pointer-jumping loop runs.
 """
 
 from __future__ import annotations
@@ -346,42 +347,46 @@ LOCAL_CC_MAX_EDGES = 100_000
 def _local_cc_relabel(pairs: DataFrame) -> DataFrame | None:
     """Driver-side components of a SMALL pair graph, or None over the gate.
 
-    Collects at most ``LOCAL_CC_MAX_EDGES + 1`` (doc_a, doc_b) rows; more
-    than ``LOCAL_CC_MAX_EDGES`` means the graph is over the gate and the
-    caller must run the distributed loop. Otherwise a min-root union-find
-    (the smaller root always wins a union, so every root is its
-    component's minimum id) gives each endpoint its component, and the
-    result is (node, component) for the endpoints whose component is NOT
-    their own id — every other id maps to itself, which callers restore
-    with ``coalesce(component, id)``. Rows with a null endpoint are
-    skipped, as the loop's join skips them. The relabel rows ship as an
-    Arrow-backed local relation (``LocalTableScan``, also when empty), so
-    broadcasting them costs no Python worker."""
-    from ram_datapipeline_spark.session import local_rows_df
+    ``bounded_collect`` pulls at most ``LOCAL_CC_MAX_EDGES + 1``
+    (doc_a, doc_b) rows as one Arrow table; more than
+    ``LOCAL_CC_MAX_EDGES`` means the graph is over the gate and the
+    caller must run the distributed loop. Otherwise rows with a null
+    endpoint are dropped (as the loop's join skips them), the ids become
+    dense indices in id order (``graph.dense_edge_index``), and a min-root
+    union-find over those indices (the smaller root always wins a union,
+    so every root is its component's minimum id) gives each endpoint its
+    component. The result is (node, component) for the endpoints whose
+    component is NOT their own id — every other id maps to itself, which
+    callers restore with ``coalesce(component, id)``. The relabel rows
+    ship as an Arrow-backed local relation (``LocalTableScan``, also when
+    empty), so broadcasting them costs no Python worker."""
+    from ram_datapipeline_spark.operators.graph import dense_edge_index
+    from ram_datapipeline_spark.session import bounded_collect, local_rows_df
 
-    rows = pairs.select("doc_a", "doc_b").limit(LOCAL_CC_MAX_EDGES + 1).collect()
-    if len(rows) > LOCAL_CC_MAX_EDGES:
+    table = bounded_collect(pairs.select("doc_a", "doc_b"), LOCAL_CC_MAX_EDGES)
+    if table is None:
         return None
-    parent: dict = {}
+    ids, a, b = dense_edge_index(table)
+    parent = list(range(len(ids)))
 
     def find(x):
         root = x
-        while parent.get(root, root) != root:
+        while parent[root] != root:
             root = parent[root]
         while x != root:  # path compression
             parent[x], x = root, parent[x]
         return root
 
-    for a, b in rows:
-        if a is None or b is None:
-            continue
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
+    for x, y in zip(a.tolist(), b.tolist()):
+        rx, ry = find(x), find(y)
+        if rx != ry:
+            parent[max(rx, ry)] = min(rx, ry)
+    ids = ids.tolist()
+    roots = [find(x) for x in range(len(ids))]
     id_type = pairs.schema["doc_a"].dataType.simpleString()
     return local_rows_df(
         pairs.sparkSession,
-        [(v, find(v)) for v in parent],
+        [(ids[x], ids[r]) for x, r in enumerate(roots) if r != x],
         f"node {id_type}, component {id_type}",
     )
 

@@ -82,6 +82,20 @@ def local_rows_df(
         return spark.createDataFrame(rows, schema)
 
 
+def bounded_collect(df: DataFrame, max_rows: int) -> "pyarrow.Table | None":
+    """``df`` as a driver-side ``pyarrow.Table``, or None when it has more
+    than ``max_rows`` rows.
+
+    The size gate of a driver-local fast path: it pulls at most
+    ``max_rows + 1`` rows through ``DataFrame.toArrow()`` (Arrow batches,
+    no Python ``Row`` objects), so an over-gate input is never
+    materialized in full on the driver. An empty input returns an empty
+    table that still carries ``df``'s schema.
+    """
+    table = df.limit(max_rows + 1).toArrow()
+    return None if table.num_rows > max_rows else table
+
+
 def _env_knob(name: str, pattern: str, expected: str) -> str | None:
     """``$name`` if set and non-empty, else None; a value that does not
     match ``pattern`` raises ValueError naming the variable and the value,

@@ -365,7 +365,10 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Communities on the co-order part graph by 2-round synchronous LPA
     with (max count, min label) tie-break — fully deterministic, the
     oracle replays both rounds unrolled
-    (operators/graph.py::label_propagation)."""
+    (operators/graph.py::label_propagation). The integer part keys take
+    the driver-local numpy rounds while the edge list is under
+    ``graph.LOCAL_LPA_MAX_EDGES`` rows (both sf0.01's ~119k and sf0.1's
+    ~1.2M are); a larger graph runs the distributed loop."""
     lp = label_propagation(
         _co_order_edges(spark, sf_dir), rounds=2, u="u", v="v"
     )

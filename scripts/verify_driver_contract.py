@@ -9,6 +9,7 @@ round driver does.
 
 Exit 0 iff everything matches. Usage: python scripts/verify_driver_contract.py
 [--sf-dir /root/testdata/sf0.01] [--only name1,name2]
+[--distributed]
 """
 
 from __future__ import annotations
@@ -55,9 +56,22 @@ def main() -> int:
         "oracle+hash) as JSON — the full-sweep bench trend record "
         "(VERDICT r11 #3)",
     )
+    ap.add_argument(
+        "--distributed",
+        action="store_true",
+        help="set dedup.LOCAL_CC_MAX_EDGES and graph.LOCAL_LPA_MAX_EDGES "
+        "to 0 for the run, so connected components and label propagation "
+        "take their distributed over-gate paths",
+    )
     args = ap.parse_args()
 
     import __spark_entry__ as entry_mod
+
+    if args.distributed:
+        from ram_datapipeline_spark.operators import dedup, graph
+
+        dedup.LOCAL_CC_MAX_EDGES = 0
+        graph.LOCAL_LPA_MAX_EDGES = 0
 
     spark = get_spark(app_name="verify-driver-contract")
 

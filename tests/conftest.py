@@ -57,6 +57,37 @@ def cc_path(request, monkeypatch):
     return Path
 
 
+@pytest.fixture(params=["local", "spark", "boundary"])
+def lpa_path(request, monkeypatch):
+    """Runs a label-propagation test once per path: ``local`` keeps the
+    default driver gate (numpy rounds), ``spark`` sets the gate to 0 so
+    the distributed loop runs, ``boundary`` sets the gate to exactly the
+    graph's non-self-loop edge count (the inclusive edge of the local
+    path). Call ``lpa_path.gate(n_edges)`` before running the operator;
+    ``lpa_path.spark_calls`` counts the distributed loop's runs."""
+    from ram_datapipeline_spark.operators import graph
+
+    real_loop = graph._label_propagation_distributed
+
+    class Path:
+        mode = request.param
+        spark_calls = 0
+
+        @staticmethod
+        def gate(n_edges: int) -> None:
+            if request.param == "spark":
+                monkeypatch.setattr(graph, "LOCAL_LPA_MAX_EDGES", 0)
+            elif request.param == "boundary":
+                monkeypatch.setattr(graph, "LOCAL_LPA_MAX_EDGES", n_edges)
+
+    def counting_loop(*args, **kwargs):
+        Path.spark_calls += 1
+        return real_loop(*args, **kwargs)
+
+    monkeypatch.setattr(graph, "_label_propagation_distributed", counting_loop)
+    return Path
+
+
 @pytest.fixture(scope="session")
 def duck():
     con = duckdb.connect()

@@ -322,14 +322,16 @@ def test_pq_codes_matches_numpy_replay(spark):
         assert (dist, code) == min(cands)
 
 
-def test_label_propagation_two_cliques(spark):
+def test_label_propagation_two_cliques(spark, lpa_path):
     from ram_datapipeline_spark.operators.graph import label_propagation
 
     # two triangles {1,2,3} and {10,11,12} bridged by 3-10
     edges = [(1, 2), (2, 3), (1, 3), (10, 11), (11, 12), (10, 12), (3, 10)]
     df = spark.createDataFrame(edges, "u long, v long")
+    lpa_path.gate(len(edges))
     got = {r.node: r.community
            for r in label_propagation(df, rounds=2).collect()}
+    assert lpa_path.spark_calls == (1 if lpa_path.mode == "spark" else 0)
 
     # hand replay of 2 synchronous rounds, (max count, min label) tie-break
     sym = {}
@@ -346,6 +348,41 @@ def test_label_propagation_two_cliques(spark):
             nxt[n] = min(cnt, key=lambda l: (-cnt[l], l))
         lbl = nxt
     assert got == lbl
+
+
+def test_label_propagation_local_equals_distributed(spark, monkeypatch):
+    """The driver-local rounds reproduce the distributed loop exactly,
+    schema included, for rounds 0-3 on a graph with count ties,
+    self-loops, duplicate and reversed edges and a null endpoint. The ids
+    are ``int``, so the shipped schema follows the input's integral type
+    (``bigint`` is the two-cliques test)."""
+    from ram_datapipeline_spark.operators import graph
+
+    edges = [
+        (1, 2), (1, 3), (2, 4), (3, 4),  # 4-cycle: every vote a 1-1 tie
+        (4, 5), (5, 6), (6, 4),          # triangle on the cycle
+        (2, 1), (1, 2), (5, 4),          # reversed and duplicate edges
+        (6, 6), (7, 7),                  # self-loops; 7 has no other edge
+        (8, None), (None, 9),            # null endpoints
+        (8, 9), (9, 10), (10, 8), (10, 11),
+    ]
+    df = spark.createDataFrame(edges, "u int, v int")
+    gate = graph.LOCAL_LPA_MAX_EDGES
+    local_calls = []
+    real_local = graph._label_propagation_local
+    monkeypatch.setattr(
+        graph, "_label_propagation_local",
+        lambda *a: local_calls.append(a[2]) or real_local(*a),
+    )
+    for rounds in range(4):
+        monkeypatch.setattr(graph, "LOCAL_LPA_MAX_EDGES", gate)
+        local = graph.label_propagation(df, rounds=rounds)
+        monkeypatch.setattr(graph, "LOCAL_LPA_MAX_EDGES", 0)
+        dist = graph.label_propagation(df, rounds=rounds)
+        assert local.schema == dist.schema
+        assert sorted(local.collect()) == sorted(dist.collect())
+    assert local_calls == [0, 1, 2, 3]
+    assert {r.node for r in local.collect()} == {1, 2, 3, 4, 5, 6, 8, 9, 10, 11}
 
 
 def test_repeated_spans_semantics(spark):

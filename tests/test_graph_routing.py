@@ -7,6 +7,8 @@ from __future__ import annotations
 import heapq
 import math
 
+import pytest
+
 from ram_datapipeline_spark.operators.graph import (
     make_hub_routing_kernel,
     min_plus_closure,
@@ -117,6 +119,33 @@ def test_local_closure_bit_identical_to_distributed(spark):
     loc = {(s, t): w for s, t, w in min_plus_closure_rows(edge_rows, 3)}
     assert set(dist) == set(loc)
     assert all(dist[k] == loc[k] for k in dist)  # bitwise-equal doubles
+
+
+@pytest.mark.parametrize("block_rows", [1, 3])
+def test_local_closure_row_blocks_match_unblocked(monkeypatch, block_rows):
+    """Squaring in row blocks changes no distance: a random graph with
+    absent pairs, forced to 1- and 3-row blocks, gives the one-block
+    result bit for bit."""
+    import random
+
+    from ram_datapipeline_spark.operators import graph
+
+    rng = random.Random(5)
+    n = 11
+    # two components, {0..6} and {7..10}, so many pairs stay absent
+    edge_rows = [
+        (s, t, float(rng.randint(1, 50)) / 7.0)
+        for s in range(n)
+        for t in range(n)
+        if s != t and (s < 7) == (t < 7) and rng.random() < 0.3
+    ]
+    # one squaring: paths of at most 2 edges, so the result is not yet the
+    # fixpoint and a block that read a neighbour block's new rows would show
+    whole = graph.min_plus_closure_rows(edge_rows, 1)
+    monkeypatch.setattr(graph, "CLOSURE_BLOCK_BYTES", 8 * n * n * block_rows)
+    blocked = graph.min_plus_closure_rows(edge_rows, 1)
+    assert blocked == whole
+    assert len(whole) < n * n
 
 
 def test_triangle_counts_matches_bruteforce(spark):

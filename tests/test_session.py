@@ -56,3 +56,21 @@ def test_get_spark_accepts_wellformed_knob(no_session, monkeypatch, name, value)
     monkeypatch.setenv(name, value)
     with pytest.raises(AssertionError, match="built a session"):
         get_spark()
+
+
+@pytest.mark.parametrize("n_rows, max_rows", [(5, 5), (6, 5), (0, 5)])
+def test_bounded_collect_gate(spark, n_rows, max_rows):
+    """At the gate the rows come back as an Arrow table, one row over it
+    gives None, and an empty input keeps its schema."""
+    import pyarrow as pa
+
+    from ram_datapipeline_spark.session import bounded_collect
+
+    df = spark.range(n_rows).selectExpr("id AS a", "CAST(id AS INT) AS b")
+    table = bounded_collect(df, max_rows)
+    if n_rows > max_rows:
+        assert table is None
+        return
+    assert table.schema.types == [pa.int64(), pa.int32()]
+    assert table.column_names == ["a", "b"]
+    assert table.column("a").to_pylist() == list(range(n_rows))

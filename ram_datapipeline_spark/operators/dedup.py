@@ -138,16 +138,21 @@ def minhash_signatures(
     (h1, h2); permutation p's hash is ``(h1 + p*h2) mod 2^40`` (universal
     family), minimized per doc with n_perms conditional-min aggregate
     expressions — a single shuffle carrying one row per doc, zero row
-    multiplication, one hash invocation per shingle."""
+    multiplication, one hash invocation per shingle.
+
+    The plan is built from SQL expression strings, one py4j call per
+    output column: built node by node through the Column API, the same
+    expressions cost one driver-to-JVM round trip per expression NODE
+    (thousands per band index), a fixed cost that dominates the build
+    for a small refresh batch."""
     sh = shingles(df, id_col, text_col)
-    h = F.md5(F.col("shingle"))
-    v = sh.select(
-        F.col(id_col),
-        F.conv(F.substring(h, 1, 10), 16, 10).cast("long").alias("_h1"),
-        F.conv(F.substring(h, 11, 10), 16, 10).cast("long").alias("_h2"),
+    v = sh.selectExpr(
+        f"`{id_col}`",
+        "CAST(conv(substring(md5(shingle), 1, 10), 16, 10) AS BIGINT) AS _h1",
+        "CAST(conv(substring(md5(shingle), 11, 10), 16, 10) AS BIGINT) AS _h2",
     )
     mins = [
-        F.min((F.col("_h1") + p * F.col("_h2")) % PERM_MOD).alias(f"h{p}")
+        F.expr(f"min((_h1 + {p} * _h2) % {PERM_MOD}) AS h{p}")
         for p in range(n_perms)
     ]
     return v.groupBy(id_col).agg(*mins)
@@ -156,21 +161,17 @@ def minhash_signatures(
 def minhash_bands(sigs: DataFrame, id_col: str = "doc_id", band_rows: int = BAND_ROWS) -> DataFrame:
     """Band signatures: (id, band, sig) — one stacked row per band, sig =
     dash-joined minhash values (fixed slot order). The stack is a cheap
-    JVM-side explode of n_bands precomputed structs."""
+    JVM-side ``inline`` of n_bands precomputed structs, written as one
+    SQL expression."""
     n_perms = sum(1 for c in sigs.columns if c != id_col)
     n_bands = n_perms // band_rows
-    bands_arr = F.array(*[
-        F.struct(
-            F.lit(b).alias("band"),
-            F.concat_ws(
-                "-", *[F.col(f"h{b * band_rows + r}") for r in range(band_rows)]
-            ).alias("sig"),
-        )
+    structs = ", ".join(
+        f"named_struct('band', {b}, 'sig', concat_ws('-', "
+        + ", ".join(f"h{b * band_rows + r}" for r in range(band_rows))
+        + "))"
         for b in range(n_bands)
-    ])
-    return sigs.select(F.col(id_col), F.explode(bands_arr).alias("_b")).select(
-        F.col(id_col), F.col("_b.band").alias("band"), F.col("_b.sig").alias("sig")
     )
+    return sigs.selectExpr(f"`{id_col}`", f"inline(array({structs}))")
 
 
 def minhash_lsh_pairs(
@@ -1021,11 +1022,8 @@ def minhash_band_index(
     bands = minhash_bands(
         minhash_signatures(df, id_col, text_col, n_perms), id_col, band_rows
     )
-    return bands.select(
-        F.col(id_col),
-        F.concat_ws(":", F.col("band").cast("string"), F.col("sig")).alias(
-            "bkey"
-        ),
+    return bands.selectExpr(
+        f"`{id_col}`", "concat_ws(':', CAST(band AS STRING), sig) AS bkey"
     )
 
 
@@ -1055,23 +1053,56 @@ def write_labels_table(labels: DataFrame, table: str) -> None:
     labels.write.mode("overwrite").format("parquet").saveAsTable(table)
 
 
+def _write_bucketed_index(index: DataFrame, table: str, mode: str, n_buckets: int) -> None:
+    """The one layout of a standing band index: parquet, bucketed and
+    sorted on ``bkey``."""
+    (
+        index.write.mode(mode)
+        .format("parquet")
+        .bucketBy(n_buckets, "bkey")
+        .sortBy("bkey")
+        .saveAsTable(table)
+    )
+
+
 def write_minhash_index(
-    index: DataFrame, table: str, n_buckets: int = 32
+    index: DataFrame, table: str, n_buckets: int | None = None
 ) -> None:
     """Persist the band index BUCKETED on ``bkey`` (+ sorted within
     buckets): a later batch-vs-corpus probe joins on bkey, and the
     bucketed layout lets Spark scan the corpus side pre-partitioned —
     zero corpus-side exchange, zero re-hash. At 100 TB the index is
     ~n_bands rows × ~50 bytes per document (a few TB for a 100 TB
-    corpus) and this bucketed write is the ONLY time it shuffles."""
+    corpus) and this bucketed write is the ONLY time it shuffles.
+
+    ``n_buckets`` defaults to the session's ``defaultParallelism``: one
+    bucket per core, so every scan of the index runs one task per core.
+    Buckets beyond the core count add only per-file and per-task fixed
+    cost (a small index's write ends in one task writing every bucket
+    file). Later appends go through :func:`append_minhash_index`, which
+    reuses the table's own count."""
+    if n_buckets is None:
+        n_buckets = index.sparkSession.sparkContext.defaultParallelism
     _drop_stale_table(index.sparkSession, table)
-    (
-        index.write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(n_buckets, "bkey")
-        .sortBy("bkey")
-        .saveAsTable(table)
-    )
+    _write_bucketed_index(index, table, "overwrite", n_buckets)
+
+
+def append_minhash_index(index: DataFrame, table: str) -> None:
+    """Append band rows to a standing index table written by
+    :func:`write_minhash_index`, with the table's OWN bucket count read
+    from the catalog (``DESCRIBE TABLE EXTENDED``): Spark rejects an
+    append whose bucket spec differs from the table's, and one that
+    leaves the spec out, so the appender must not carry a bucket count
+    of its own."""
+    info = {
+        r.col_name: r.data_type
+        for r in index.sparkSession.sql(
+            f"DESCRIBE TABLE EXTENDED `{table}`"
+        ).collect()
+    }
+    if "Num Buckets" not in info:
+        raise ValueError(f"table {table!r} is not bucketed")
+    _write_bucketed_index(index, table, "append", int(info["Num Buckets"]))
 
 
 def incremental_lsh_dedup(
@@ -1106,13 +1137,16 @@ def incremental_lsh_dedup(
 
     The batch's band rows are needed on BOTH sides (as probes, and as
     intra-batch partners); they are computed ONCE and
-    local-checkpointed (lazily — the first action materializes the
-    cache, no extra scheduled job) — without it Catalyst would
-    re-shingle and re-hash the batch per reference. Corpus and
-    intra-batch partners
-    then resolve in a SINGLE bkey join against a tagged union
-    (bucketed index scan ∪ checkpointed batch bands): the corpus rows
-    qualify unconditionally, the batch rows only when earlier.
+    local-checkpointed — without it Catalyst would re-shingle and
+    re-hash the batch per reference. ``eager=False`` defers only the
+    checkpoint's final stage to the first action: under AQE, taking
+    the plan's RDD already runs its shuffle-map stages, so THIS CALL
+    schedules 2 jobs (the batch's round-robin repartition and the
+    minhash aggregate's exchange; 0.4-0.7 s on a 4-core host at
+    sf0.01). Corpus and intra-batch partners then resolve in a SINGLE
+    bkey join against a tagged union (bucketed index scan ∪
+    checkpointed batch bands): the corpus rows qualify
+    unconditionally, the batch rows only when earlier.
     """
     bb = minhash_band_index(
         batch, id_col, text_col, n_perms, band_rows
@@ -1161,7 +1195,11 @@ def incremental_lsh_candidates(
     the same no-corpus-rehash shape as :func:`incremental_lsh_dedup`.
     This is the edge feed for incremental graph maintenance (components
     merging across snapshots), where direction/priority doesn't apply:
-    every collision is an undirected edge."""
+    every collision is an undirected edge.
+
+    As there, the batch bands' ``localCheckpoint(eager=False)`` is not
+    free at build time: under AQE this call runs the 2 shuffle-map jobs
+    of the batch's repartition and minhash aggregate before returning."""
     bb = minhash_band_index(
         batch, id_col, text_col, n_perms, band_rows
     ).localCheckpoint(eager=False)

@@ -1,13 +1,14 @@
 """Continuous-ingestion dedup (streaming twin of VERDICT r9 #7).
 
 The batch operators (`operators/dedup.py::incremental_lsh_dedup` /
-`write_minhash_index`) dedup ONE new snapshot against the standing
-bucketed band index. A real ingestion pipeline receives documents
-continuously; this module closes the loop with `foreachBatch`: every
-micro-batch is deduped against the index AS OF its arrival, its verdicts
-append to a results directory, and its own band rows append to the index
-— so each document is compared against everything that arrived before it
-plus lower-id documents of its own micro-batch. The per-batch work is
+`write_minhash_index` / `append_minhash_index`) dedup ONE new snapshot
+against the standing bucketed band index. A real ingestion pipeline
+receives documents continuously; this module closes the loop with
+`foreachBatch`: every micro-batch is deduped against the index AS OF its
+arrival, its verdicts append to a results directory, and its own band
+rows append to the index — so each document is compared against
+everything that arrived before it plus lower-id documents of its own
+micro-batch. The per-batch work is
 exactly the batch operator (only the arriving documents are hashed; the
 corpus side stays a bucketed scan), so the streaming path inherits the
 batch path's oracle-proven semantics — the equivalence test replays the
@@ -30,13 +31,14 @@ def incremental_dedup_stream(
     index_table: str,
     results_path: str,
     checkpoint_dir: str,
-    n_buckets: int = 32,
     query_name: str = "incremental_dedup",
 ):
     """Start the continuous-ingestion dedup query; returns the
     StreamingQuery. ``index_table`` must exist (seed it with
     ``write_minhash_index`` over the standing corpus — an EMPTY corpus
-    frame seeds a cold start); ``n_buckets`` must match the seed's."""
+    frame seeds a cold start). Each micro-batch appends with the index
+    table's own bucket spec (``append_minhash_index``), so the seed alone
+    sets the bucket count."""
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         from ram_datapipeline_spark.operators import dedup as D
@@ -49,16 +51,9 @@ def incremental_dedup_stream(
         )
         verdicts.write.mode("append").parquet(results_path)
         # grow the index so LATER micro-batches dedup against this one;
-        # append preserves the table's bucket spec (bkey), so the
+        # the append reuses the table's bucket spec (bkey), so the
         # corpus-side scan stays pre-bucketed forever
-        (
-            D.minhash_band_index(batch_df)
-            .write.mode("append")
-            .format("parquet")
-            .bucketBy(n_buckets, "bkey")
-            .sortBy("bkey")
-            .saveAsTable(index_table)
-        )
+        D.append_minhash_index(D.minhash_band_index(batch_df), index_table)
 
     return (
         docs_stream.writeStream.foreachBatch(_process)

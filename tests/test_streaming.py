@@ -713,6 +713,7 @@ def test_incremental_dedup_stream_matches_sequential_batches(spark, tmp_path):
     next one runs. Two availableNow runs over one checkpoint pin the
     file→micro-batch assignment deterministically."""
     from ram_datapipeline_spark.operators.dedup import (
+        append_minhash_index,
         incremental_lsh_dedup,
         minhash_band_index,
         write_minhash_index,
@@ -775,9 +776,7 @@ def test_incremental_dedup_stream_matches_sequential_batches(spark, tmp_path):
             bdf, spark.table("st_inc_dedup_ref")
         ).collect():
             want[r.doc_id] = (r.is_dup, r.dup_of)
-        minhash_band_index(bdf).write.mode("append").format(
-            "parquet"
-        ).bucketBy(32, "bkey").sortBy("bkey").saveAsTable("st_inc_dedup_ref")
+        append_minhash_index(minhash_band_index(bdf), "st_inc_dedup_ref")
 
     assert got == want
     assert got[21] == (True, 1) and got[22] == (True, 11)
